@@ -14,7 +14,7 @@ Two physical strategies, same semantics:
 
 * :func:`rollup_tiers_map` — the 100-TB path. Each series is one row
   (``tokens array<int>``), so all three tiers are computed inside one
-  Arrow ``mapInPandas`` pass: **zero shuffle**, map-only, embarrassingly
+  Arrow ``mapInArrow`` pass: **zero shuffle**, map-only, embarrassingly
   parallel across executors; the kernel is the same NumPy code the pytest
   oracle runs (kernels/stats.py).
 

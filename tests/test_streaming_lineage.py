@@ -41,9 +41,12 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
     assert inc2.run(corpus) == 4  # only the remaining batches
     committed = inc2.committed()
     assert sorted(committed) == list(range(6))
-    # lineage recorded per batch
+    # lineage recorded per batch, exactly: the batches partition the corpus
     for rec in committed.values():
         assert rec["series"] > 0 and rec["tokens"] > 0 and rec["wall_ms"] >= 0
+    total = corpus.agg(F.count("*").alias("s"), F.sum("n_tok").alias("t")).collect()[0]
+    assert sum(r["series"] for r in committed.values()) == total["s"]
+    assert sum(r["tokens"] for r in committed.values()) == total["t"]
 
     # resumed store == one-shot rollup, exactly
     assert _canon(inc2.read_store(spark)) == _canon(rollup_once(corpus))
@@ -54,6 +57,90 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
 
 def rollup_once(corpus):
     return T.rollup_tiers_map(corpus)
+
+
+def test_empty_batches_commit_zero_lineage(spark, tmp_path):
+    """More batches than series: the empty hash ranges still commit, with
+    zero counts, and the store equals the one-shot rollup."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    src = str(tmp_path / "corpus")
+    C.synthetic_corpus(spark, 3, seed=5, partitions=2).write.parquet(src)
+    corpus = spark.read.parquet(src)
+    inc = IncrementalRollup(str(tmp_path / "store"), n_batches=8)
+    assert inc.run(corpus) == 8
+    recs = inc.committed()
+    assert sorted(recs) == list(range(8))
+    empty = [r for r in recs.values() if r["series"] == 0]
+    assert len(empty) >= 5
+    assert all(r["tokens"] == 0 for r in empty)
+    assert sum(r["series"] for r in recs.values()) == 3
+    want = corpus.agg(F.sum("n_tok")).collect()[0][0]
+    assert sum(r["tokens"] for r in recs.values()) == want
+    assert _canon(inc.read_store(spark)) == _canon(rollup_once(corpus))
+
+
+def _parquet_corpus(spark, tmp_path):
+    src = str(tmp_path / "corpus")
+    C.token_arrays(spark, SF_DIR).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok"
+    ).write.parquet(src)
+    return spark.read.parquet(src)
+
+
+def _run_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return the task count of each job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+def test_one_spark_job_per_committed_batch(spark, tmp_path):
+    """A batch commit is one Spark job: the lineage counts are observed by
+    the write job, not recomputed by a second aggregation over the corpus."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    corpus = _parquet_corpus(spark, tmp_path)
+    inc = IncrementalRollup(str(tmp_path / "store"), n_batches=4)
+    jobs = _run_in_group(
+        spark, "test-one-job-per-batch", lambda: inc.run(corpus, fail_after=1)
+    )
+    assert len(jobs) == 1
+    rec = inc.committed()[0]
+    want = corpus.filter(
+        F.abs(F.xxhash64(F.col("doc_id"))) % 4 == 0
+    ).agg(F.count("*").alias("s"), F.sum("n_tok").alias("t")).collect()[0]
+    assert (rec["series"], rec["tokens"]) == (want["s"], want["t"])
+
+
+def test_batch_tasks_sized_by_observed_tokens(spark, tmp_path, monkeypatch):
+    """The first batch keeps the input's splits as tasks; later batches are
+    coalesced to ceil(observed tokens / TOKENS_PER_TASK) tasks, which never
+    drops below the input's splits when batches are large."""
+    from dtaianomaly_spark.streaming import incremental as I
+
+    corpus = _parquet_corpus(spark, tmp_path)
+    splits = corpus.rdd.getNumPartitions()
+    assert splits > 1  # else the task counts below cannot tell the sizing
+    inc = I.IncrementalRollup(str(tmp_path / "store"), n_batches=4)
+    run_one = lambda: inc.run(corpus, fail_after=1)  # noqa: E731
+    assert _run_in_group(spark, "test-sizing-first", run_one) == [splits]
+    # the corpus is far below TOKENS_PER_TASK: one task per batch, resumed too
+    assert _run_in_group(spark, "test-sizing-small", run_one) == [1]
+    monkeypatch.setattr(I, "TOKENS_PER_TASK", 1)
+    assert _run_in_group(spark, "test-sizing-large", run_one) == [splits]
+    assert sorted(inc.committed()) == [0, 1, 2]
+    assert inc.run(corpus) == 1
+    assert _canon(inc.read_store(spark)) == _canon(rollup_once(corpus))
 
 
 def test_structured_streaming_rollup(spark, tmp_path):
